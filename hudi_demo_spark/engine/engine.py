@@ -50,7 +50,12 @@ from hudi_demo_spark.engine.config import (
     TIMELINE_DIR,
     TableConfig,
 )
-from hudi_demo_spark.engine.keys import partition_path_col, record_key_col
+from hudi_demo_spark.engine.keys import (
+    EMPTY_PLACEHOLDER,
+    NULL_PLACEHOLDER,
+    partition_path_col,
+    record_key_col,
+)
 from hudi_demo_spark.engine.timeline import Timeline, new_instant
 from hudi_demo_spark.operators.util import rows_df as _rows_df
 
@@ -66,29 +71,38 @@ def _file_instant(name: str) -> str:
     return parts[1] if len(parts) >= 3 and parts[0] in ("b", "d") else ""
 
 
-def _footer_minmax(path: str, cols: list[str]) -> dict[str, list]:
-    """{col: [min, max]} from one parquet footer (module-level so the
-    distributed footer pass can pickle it to executors). A column whose
-    row-group stats are missing, or whose min/max is not a JSON-safe
-    scalar, is simply absent — callers treat that as un-prunable."""
+def _footer_minmax(
+    path: str, cols: list[str]
+) -> tuple[int, dict[str, list], set[str]]:
+    """(row count, {col: [min, max]}, cols that may hold nulls) from one
+    parquet footer (module-level so the distributed footer pass can
+    pickle it to executors); row count -1 if the footer is unreadable. A
+    column whose row-group stats are missing, or whose min/max is not a
+    JSON-safe scalar, is simply absent — callers treat that as
+    un-prunable. A column is in the third element unless every row group
+    reports a null count of zero."""
     try:
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
     except Exception:  # pragma: no cover
-        return {}
+        return -1, {}, set(cols)
     name_to_idx = {
         md.schema.column(i).name: i for i in range(md.num_columns)
     }
     out: dict[str, list] = {}
+    nullable: set[str] = set()
     for c in cols:
         idx = name_to_idx.get(c)
         if idx is None:
+            nullable.add(c)
             continue
         try:
             mins, maxs = [], []
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(idx).statistics
+                if st is None or not st.has_null_count or st.null_count:
+                    nullable.add(c)
                 if st is None or not st.has_min_max:
                     mins, maxs = [], []
                     break
@@ -104,7 +118,46 @@ def _footer_minmax(path: str, cols: list[str]) -> dict[str, list]:
             out[c] = [lo, hi]
         except Exception:
             continue
-    return out
+    return md.num_rows, out, nullable
+
+
+# key-field values the complex key generator maps onto one record-key
+# text: NULL becomes __null__ and "" becomes __empty__, so a string range
+# that can hold one of these proves nothing about key equality
+_KEY_PLACEHOLDERS = ("", NULL_PLACEHOLDER, EMPTY_PLACEHOLDER)
+# key-field types whose string cast (the record-key text) is injective
+# and comma-free, so equal record keys imply equal field values
+_PROVABLE_KEY_TYPES = (
+    "tinyint", "smallint", "int", "bigint", "boolean", "string",
+)
+
+
+def _provable(r) -> bool:
+    """Whether a null-free key-field range [lo, hi] can carry a
+    disjointness proof: integers, booleans or strings, and no string
+    range that holds a key-generator placeholder. Floats never do (NaN
+    and -0.0 break ordering and the key text's injectivity)."""
+    lo, hi = r
+    if isinstance(lo, str) and isinstance(hi, str):
+        return not any(lo <= p <= hi for p in _KEY_PLACEHOLDERS)
+    return type(lo) in (int, bool) and type(hi) in (int, bool)
+
+
+def _field_ranges_disjoint(file_ranges: dict, batch_ranges: dict) -> bool:
+    """True when, for some key field, the file's range and the batch's
+    range share no value — then the file holds none of the batch's keys.
+    A field missing on either side, or whose values do not compare,
+    proves nothing."""
+    for f, (blo, bhi) in batch_ranges.items():
+        r = file_ranges.get(f)
+        if r is None or not _provable(r):
+            continue
+        try:
+            if r[1] < blo or r[0] > bhi:
+                return True
+        except TypeError:
+            continue
+    return False
 
 
 class _SegPred:
@@ -623,12 +676,21 @@ class Engine:
         data = Path(cfg.path) / DATA_DIR
         added: list[dict] = []
         srcs = sorted(tmp.rglob("*.parquet"))
-        # empty-part detection reads one footer per file: distributed at
-        # the same threshold as _footer_stats so a bulk commit landing
+        # ONE footer pass per written file gives the row count (empty
+        # parts are dropped, the rest carry `rows` into the commit
+        # metadata), the record-key range, the key-field ranges and the
+        # configured column stats — distributed past
+        # _FOOTER_DISTRIBUTE_MIN files, so a bulk commit landing
         # thousands of files never serializes footer IO on the driver
-        nrows = self._footer_rows([str(s) for s in srcs])
+        key_fields = list(cfg.record_key_fields or []) if kind == "base" else []
+        stats_cols = self._stats_cols(cfg)
+        footers = self._footer_stats(
+            [str(s) for s in srcs],
+            list(dict.fromkeys([RECORD_KEY_META, *key_fields, *stats_cols])),
+        )
         for src in srcs:
-            if nrows.get(str(src), -1) == 0:
+            nrows, st, nullable = footers[str(src)]
+            if nrows == 0:
                 # empty part files (empty input slices) are dead weight:
                 # never prunable, opened by every snapshot read forever
                 src.unlink()
@@ -641,14 +703,29 @@ class Engine:
             tdir.mkdir(parents=True, exist_ok=True)
             fname = f"{prefix}_{instant}_{len(added):05d}.parquet"
             shutil.move(str(src), str(tdir / fname))
-            added.append(
-                {
-                    "path": f"{pp}/{fname}" if pp else fname,
-                    "kind": kind,
-                    "partition": pp,
-                    "bytes": (tdir / fname).stat().st_size,
-                }
-            )
+            f = {
+                "path": f"{pp}/{fname}" if pp else fname,
+                "kind": kind,
+                "partition": pp,
+                "bytes": (tdir / fname).stat().st_size,
+                "rows": nrows,
+            }
+            # the key range is the engine's range index (M1 —
+            # JavaClientHive2Hudi.java:167-180): upserts prune base files
+            # whose key range cannot intersect the incoming batch
+            if RECORD_KEY_META in st:
+                f["key_min"], f["key_max"] = st[RECORD_KEY_META]
+            # per-key-field ranges, only over null-free columns — what
+            # _affected_files proves disjointness with (see there)
+            kfr = {
+                k: st[k] for k in key_fields if k in st and k not in nullable
+            }
+            if kfr:
+                f["key_field_ranges"] = kfr
+            cs = {c: st[c] for c in stats_cols if c in st}
+            if cs:
+                f["col_stats"] = cs
+            added.append(f)
         shutil.rmtree(tmp, ignore_errors=True)
         try:
             # staging parent is SHARED across concurrent writers (one
@@ -657,30 +734,6 @@ class Engine:
             (Path(cfg.path) / "_tmp").rmdir()
         except OSError:
             pass
-        # persistent column-stats index (Hudi metadata-table col_stats
-        # analog): with `write.stats_cols`, EVERY write records [min,max]
-        # for the configured columns alongside the key range, so
-        # `read(range_filter=...)` file skipping works on never-clustered
-        # tables and survives post-clustering rewrites
-        raw_stats = str(cfg.props.get("write.stats_cols", "")).strip()
-        if raw_stats == "*":
-            # Hudi metadata-table default: col_stats for every column;
-            # non-scalar columns are skipped footer-side
-            schema = self._stored_schema(cfg)
-            stats_cols = (
-                [
-                    f.name
-                    for f in schema.fields
-                    if f.name not in META_COLS and f.name != DELETED_META
-                ]
-                if schema is not None
-                else []
-            )
-        else:
-            stats_cols = [
-                c.strip() for c in raw_stats.split(",") if c.strip()
-            ]
-        self._attach_key_ranges(added, data, stats_cols)
         if kind == "base" and self._truthy(cfg.props.get("index.bloom.enabled")):
             self._build_blooms(cfg, added)
         if kind == "base":
@@ -692,31 +745,29 @@ class Engine:
                 )
         return added
 
-    @staticmethod
-    def _parquet_rows(path: Path) -> int:
-        """Row count from the parquet footer; -1 if unreadable (file is
-        then kept — conservative)."""
-        try:
-            import pyarrow.parquet as pq
-
-            return pq.ParquetFile(str(path)).metadata.num_rows
-        except Exception:  # pragma: no cover
-            return -1
+    def _stats_cols(self, cfg: TableConfig) -> list[str]:
+        """Columns whose [min, max] every write records (Hudi
+        metadata-table col_stats analog): with `write.stats_cols`,
+        `read(range_filter=...)` file skipping works on never-clustered
+        tables and survives post-clustering rewrites."""
+        raw = str(cfg.props.get("write.stats_cols", "")).strip()
+        if raw != "*":
+            return [c.strip() for c in raw.split(",") if c.strip()]
+        # Hudi metadata-table default: col_stats for every column;
+        # non-scalar columns are skipped footer-side
+        schema = self._stored_schema(cfg)
+        if schema is None:
+            return []
+        return [
+            f.name
+            for f in schema.fields
+            if f.name not in META_COLS and f.name != DELETED_META
+        ]
 
     def _footer_rows(self, paths: list[str]) -> dict[str, int]:
-        """{path: footer row count} — same driver/executor split as
-        `_footer_stats`: small commits read on the driver, large commits
-        fan out (O(#files / cluster), not O(#files) serial)."""
-        if len(paths) >= self._FOOTER_DISTRIBUTE_MIN:
-            sc = self.spark.sparkContext
-            slices = max(1, min(len(paths) // 16, 256))
-            rows_fn = Engine._parquet_rows
-            return dict(
-                sc.parallelize(paths, slices)
-                .map(lambda p: (p, rows_fn(Path(p))))
-                .collect()
-            )
-        return {p: self._parquet_rows(Path(p)) for p in paths}
+        """{path: footer row count} (-1 if unreadable) — the row-count
+        half of `_footer_stats`, with its driver/executor split."""
+        return {p: r for p, (r, _, _) in self._footer_stats(paths, []).items()}
 
     @contextmanager
     def _file_sizing(self, cfg: TableConfig, approx_bytes: int | None = None):
@@ -772,52 +823,21 @@ class Engine:
 
     def _footer_stats(
         self, paths: list[str], cols: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """{path: {col: [min, max]}} from parquet footers. Small commits
-        read on the driver (no job-launch overhead); large commits fan
-        the footer reads out over executors so commit-time metadata work
-        is O(#files / cluster) instead of O(#files) on the driver."""
+    ) -> dict[str, tuple[int, dict[str, list], set[str]]]:
+        """{path: _footer_minmax(path, cols)} from parquet footers. Small
+        commits read on the driver (no job-launch overhead); large
+        commits fan the footer reads out over executors so commit-time
+        metadata work is O(#files / cluster) instead of O(#files) on the
+        driver."""
         if len(paths) >= self._FOOTER_DISTRIBUTE_MIN:
             sc = self.spark.sparkContext
             slices = max(1, min(len(paths) // 16, 256))
-            pairs = (
+            return dict(
                 sc.parallelize(paths, slices)
                 .map(lambda p: (p, _footer_minmax(p, cols)))
                 .collect()
             )
-            return {p: st for p, st in pairs if st}
-        out = {}
-        for p in paths:
-            st = _footer_minmax(p, cols)
-            if st:
-                out[p] = st
-        return out
-
-    def _attach_key_ranges(
-        self, added: list[dict], data: Path, stats_cols: list[str] | None = None
-    ) -> None:
-        """Record per-file min/max record key — and [min, max] for
-        `stats_cols` (the column-stats index behind clustering's file
-        skipping) — in the commit metadata, in ONE footer pass. The key
-        range is the engine's bloom/range index analog (M1 —
-        JavaClientHive2Hudi.java:167-180): upserts prune base files whose
-        key range cannot intersect the incoming batch. Only JSON-safe
-        scalar types (int/float/str) are recorded; anything else leaves
-        the file un-prunable (conservative)."""
-        cols = [RECORD_KEY_META, *(stats_cols or [])]
-        stats = self._footer_stats(
-            [str(data / f["path"]) for f in added], cols
-        )
-        for f in added:
-            st = stats.get(str(data / f["path"]))
-            if not st:
-                continue
-            kr = st.get(RECORD_KEY_META)
-            if kr is not None:
-                f["key_min"], f["key_max"] = kr
-            cs = {c: v for c, v in st.items() if c != RECORD_KEY_META}
-            if cs:
-                f["col_stats"] = cs
+        return {p: _footer_minmax(p, cols) for p in paths}
 
     def _attach_col_stats(
         self, added: list[dict], data: Path, cols: list[str]
@@ -828,7 +848,7 @@ class Engine:
             [str(data / f["path"]) for f in added], list(cols)
         )
         for f in added:
-            st = stats.get(str(data / f["path"]))
+            _, st, _ = stats[str(data / f["path"])]
             if st:
                 f["col_stats"] = {**f.get("col_stats", {}), **st}
 
@@ -2402,12 +2422,14 @@ class Engine:
         rows = []
         for m in Timeline(cfg.path).instants(include_archived=True):
             removed = m["files_removed"]
+            # older format("hudi") commits stored rows_written = null
+            written = m.get("stats", {}).get("rows_written")
             rows.append(
                 (
                     m["instant"],
                     m["action"],
                     m["operation"],
-                    int(m.get("stats", {}).get("rows_written", -1)),
+                    -1 if written is None else int(written),
                     len(m["files_added"]),
                     -1 if removed == "*" else len(removed),
                 )
@@ -2783,9 +2805,6 @@ class Engine:
     # write path  (W1-W14)
     # ------------------------------------------------------------------
 
-    def _commit_stats(self, files: list[dict], rows: int | None) -> dict:
-        return {"rows_written": rows if rows is not None else -1}
-
     def insert(
         self,
         df: DataFrame,
@@ -2824,14 +2843,8 @@ class Engine:
         out = self._prepare(df, cfg, instant)
         if drop_duplicates:
             out = self._dedup_batch(out, cfg)
-            tl = Timeline(cfg.path)
-            ranges, n_rows = self._batch_key_ranges(out)
-            live = tl.live_files()
-            if self._is_global(cfg):
-                candidates = self._global_candidates(cfg, live, ranges, out)
-            else:
-                candidates = self._affected_files(live, ranges)
-            candidates = self._bloom_prune(cfg, candidates, out, n_rows)
+            live = Timeline(cfg.path).live_files()
+            candidates, _, _ = self._index_lookup(cfg, live, out)
             if candidates:
                 on = self._merge_key_cols(cfg)
                 existing = self._read_files(cfg, candidates)
@@ -2851,7 +2864,7 @@ class Engine:
         self._precommit_validate(cfg, instant, added, [])
         action = tlmod.COMMIT if cfg.table_type == COW else tlmod.DELTACOMMIT
         meta = Timeline(cfg.path).commit(
-            instant, action, operation, added, [], self._commit_stats(added, None),
+            instant, action, operation, added, [],
             batch_id=batch_id,
         )
         self._index_append(cfg, out)
@@ -2949,7 +2962,6 @@ class Engine:
             "insert_overwrite_table",
             added,
             "*",
-            self._commit_stats(added, None),
         )
         idx = self._record_index(cfg)
         if idx is not None:
@@ -2991,7 +3003,6 @@ class Engine:
             "insert_overwrite",
             added,
             removed,
-            self._commit_stats(added, None),
         )
         self._index_append(cfg, out)
         return meta
@@ -3294,28 +3305,115 @@ class Engine:
             return affected
         return out
 
-    @staticmethod
+    # past this many batch rows the key lookup stops pulling rows to
+    # the driver and aggregates instead — the same bound as
+    # minhash_index._PROBE_COLLECT_CAP (a few MB of skinny key tuples)
+    _KEY_COLLECT_CAP = 50_000
+
     def _batch_key_ranges(
-        df: DataFrame,
-    ) -> tuple[dict[str, tuple[str, str]], int]:
-        """({partition: (min_key, max_key)}, total_rows) of an incoming
-        batch — one tiny aggregate, the upsert 'index lookup' input; the
-        row count gates the broadcast merge fast path."""
-        rows = (
-            df.groupBy(PARTITION_PATH_META)
-            .agg(F.min(RECORD_KEY_META), F.max(RECORD_KEY_META), F.count("*"))
-            .collect()
-        )
-        return {r[0]: (r[1], r[2]) for r in rows}, sum(r[3] for r in rows)
+        self, df: DataFrame, cfg: TableConfig
+    ) -> tuple[dict[str, tuple[str, str]], int, dict[str, dict]]:
+        """The upsert 'index lookup' input of an incoming batch:
+        ({partition: (min_key, max_key)}, total_rows, {partition: {key
+        field: (min, max)}}). The row count gates the broadcast merge and
+        the bloom probe; the key-field ranges let `_affected_files` prove
+        a file holds none of the batch's keys where the key TEXT ranges
+        overlap (numeric ids compare as strings, composite keys all start
+        with the first field's name).
+
+        A batch of up to _KEY_COLLECT_CAP rows comes back in ONE
+        map-side-limited collect of (partition, key, key fields) — one
+        Spark job; a bigger one runs a grouped aggregate of the same
+        summary. Only fields that can carry the proof get a range:
+        integer, boolean or string typed, null-free in the partition,
+        and — for composite keys — only when no batch value contains the
+        key text's ',' separator (a batch key then parses back into its
+        field values, and so does any stored key equal to it)."""
+        fields = list(cfg.record_key_fields or [])
+        dtypes = dict(df.dtypes)
+        if not all(dtypes.get(f) in _PROVABLE_KEY_TYPES for f in fields):
+            fields = []
+        cols = [PARTITION_PATH_META, RECORD_KEY_META, *fields]
+        tbl = df.select(*cols).limit(self._KEY_COLLECT_CAP + 1).toArrow()
+        # per partition: [min key, max key, rows, per field
+        # (min, max, has_null, has_comma)]
+        summary: dict[str, list] = {}
+        if tbl.num_rows <= self._KEY_COLLECT_CAP:
+            groups: dict[str, list] = {}
+            for row in zip(*(c.to_pylist() for c in tbl.columns)):
+                groups.setdefault(row[0], []).append(row[1:])
+            for pp, rs in groups.items():
+                per_field = []
+                for i in range(1, len(cols) - 1):
+                    vals = [r[i] for r in rs if r[i] is not None]
+                    per_field.append((
+                        min(vals, default=None), max(vals, default=None),
+                        len(vals) < len(rs),
+                        any(isinstance(v, str) and "," in v for v in vals),
+                    ))
+                keys = [r[0] for r in rs if r[0] is not None]
+                summary[pp] = [
+                    min(keys, default=None), max(keys, default=None),
+                    len(rs), per_field,
+                ]
+        else:
+            aggs = [
+                F.min(RECORD_KEY_META), F.max(RECORD_KEY_META), F.count("*"),
+            ]
+            for f in fields:
+                aggs += [
+                    F.min(f), F.max(f), F.count(f),
+                    F.max(F.instr(F.col(f).cast("string"), ",")),
+                ]
+            for r in df.groupBy(PARTITION_PATH_META).agg(*aggs).collect():
+                summary[r[0]] = [r[1], r[2], r[3], [
+                    (r[4 + 4 * i], r[5 + 4 * i], r[6 + 4 * i] < r[3],
+                     (r[7 + 4 * i] or 0) > 0)
+                    for i in range(len(fields))
+                ]]
+        ranges = {pp: (v[0], v[1]) for pp, v in summary.items()}
+        n_rows = sum(v[2] for v in summary.values())
+        if len(fields) > 1 and any(
+            fs[3] for v in summary.values() for fs in v[3]
+        ):
+            fields = []
+        franges = {
+            pp: {
+                f: (lo, hi)
+                for f, (lo, hi, has_null, _) in zip(fields, v[3])
+                if not has_null and _provable((lo, hi))
+            }
+            for pp, v in summary.items()
+        }
+        return ranges, n_rows, franges
 
     @staticmethod
     def _affected_files(
-        live: dict[str, dict], ranges: dict[str, tuple[str, str]]
+        live: dict[str, dict],
+        ranges: dict[str, tuple[str, str]],
+        franges: dict[str, dict] | None = None,
     ) -> dict[str, dict]:
-        """Bloom/range-index pruning (M1): keep only live files in the
-        batch's partitions whose [key_min, key_max] can intersect the
-        batch's key range — others cannot contain colliding keys and stay
-        live untouched (file-group-scoped rewrite, not whole-partition)."""
+        """Range-index pruning (M1): the live files in the batch's
+        partitions that may hold one of its keys. Others cannot contain
+        colliding keys and stay live untouched (file-group-scoped
+        rewrite, not whole-partition), so a batch of NEW keys appends a
+        file instead of rewriting the ones next to it.
+
+        A file is dropped when its [key_min, key_max] misses the batch's
+        key range, or when for some record-key field its recorded
+        `key_field_ranges` entry and the batch's range for that field
+        (`franges`, from _batch_key_ranges) are disjoint: equal record
+        keys need equal values in every key field. The file is kept
+        whenever that proof is weak — files without field ranges (older
+        commits, external bootstrap files, deltas, format("hudi")
+        writes), float fields, fields with a null on either side, string
+        ranges that hold "" or the key generator's __null__/__empty__
+        placeholders (they collide in composite key text), composite
+        batches whose values contain the key text's ',' separator, and
+        values that do not compare. The appends this enables are bounded
+        by `_fold_small_files` (K = _SMALL_FILE_FOLD_MIN small files per
+        partition)."""
+        franges = franges or {}
         out: dict[str, dict] = {}
         for p, m in live.items():
             pp = m.get("partition", "")
@@ -3330,6 +3428,10 @@ class Engine:
                 and (kmax < bmin or kmin > bmax)
             ):
                 continue
+            if _field_ranges_disjoint(
+                m.get("key_field_ranges") or {}, franges.get(pp) or {}
+            ):
+                continue
             out[p] = m
         return out
 
@@ -3339,13 +3441,14 @@ class Engine:
         live: dict[str, dict],
         ranges: dict[str, tuple[str, str]],
         batch: DataFrame,
+        franges: dict[str, dict] | None = None,
     ) -> dict[str, dict]:
         """Global-index candidate files: key-range prune across all
         partitions, then — when the record-level index is available —
         scope to the partitions that actually hold the batch's keys.
         With uuid-like keys the range prune alone keeps everything; the
         index keeps ~#batch partitions (Hudi 0.14 RLI behavior)."""
-        out = self._affected_files_global(live, ranges)
+        out = self._affected_files_global(live, ranges, franges)
         idx = self._record_index(cfg)
         if idx is not None and idx.usable():
             parts = idx.lookup_partitions(batch)
@@ -3356,19 +3459,31 @@ class Engine:
 
     @staticmethod
     def _affected_files_global(
-        live: dict[str, dict], ranges: dict[str, tuple[str, str]]
+        live: dict[str, dict],
+        ranges: dict[str, tuple[str, str]],
+        franges: dict[str, dict] | None = None,
     ) -> dict[str, dict]:
         """Global-index lookup (Hudi GLOBAL_BLOOM analog): a key may live
         in ANY partition, so candidate files are pruned by key range
-        alone, across all partitions. Base files whose [key_min, key_max]
-        cannot intersect the batch's global key range stay untouched —
-        the same footer-stats skipping as the partition-scoped path,
-        minus the partition scoping."""
+        alone, across all partitions — the `_affected_files` rules,
+        applied against the batch's ranges over ALL its partitions (a
+        key field counts only when every partition has a range for
+        it)."""
         mins = [lo for lo, _ in ranges.values() if lo is not None]
         maxs = [hi for _, hi in ranges.values() if hi is not None]
         if not mins:
             return dict(live)
         bmin, bmax = min(mins), max(maxs)
+        per_part = list((franges or {}).values())
+        glob: dict[str, tuple] = {}
+        for f in set.intersection(*map(set, per_part)) if per_part else ():
+            try:
+                glob[f] = (
+                    min(r[f][0] for r in per_part),
+                    max(r[f][1] for r in per_part),
+                )
+            except TypeError:
+                continue
         out: dict[str, dict] = {}
         for p, m in live.items():
             kmin, kmax = m.get("key_min"), m.get("key_max")
@@ -3376,7 +3491,62 @@ class Engine:
                 kmax < bmin or kmin > bmax
             ):
                 continue
+            if _field_ranges_disjoint(m.get("key_field_ranges") or {}, glob):
+                continue
             out[p] = m
+        return out
+
+    def _index_lookup(
+        self, cfg: TableConfig, live: dict[str, dict], batch: DataFrame
+    ) -> tuple[dict[str, dict], dict[str, tuple[str, str]], int]:
+        """Tag a keyed batch against the table's indexes (Hudi's index
+        lookup, JavaClientHive2Hudi.java:167-180): (live files that may
+        hold one of its keys, {partition: key range}, batch rows). Key
+        and key-field range pruning — partition-scoped, or across all
+        partitions under the global index — then the bloom probe."""
+        ranges, n_rows, franges = self._batch_key_ranges(batch, cfg)
+        if self._is_global(cfg):
+            cand = self._global_candidates(cfg, live, ranges, batch, franges)
+        else:
+            cand = self._affected_files(live, ranges, franges)
+        return self._bloom_prune(cfg, cand, batch, n_rows), ranges, n_rows
+
+    # size-tiered merge for appends: a partition that an upsert writes
+    # to without touching any of its files gets its small base files
+    # folded into the same commit once it holds this many of them
+    _SMALL_FILE_FOLD_MIN = 4
+
+    def _fold_small_files(
+        self,
+        cfg: TableConfig,
+        live: dict[str, dict],
+        affected: dict[str, dict],
+        ranges: dict[str, tuple[str, str]],
+    ) -> dict[str, dict]:
+        """`affected` plus, for every partition the batch writes to but
+        touches no file of (a pure append there), that partition's live
+        base files under `write.target_file_mb` when there are at least
+        _SMALL_FILE_FOLD_MIN of them. Appends then leave each partition
+        between 1 and K small files instead of one more per batch, at
+        the price of one rewrite of K small files every K appends. A
+        partition the lookup kept any file of is never widened: a point
+        upsert stays a one-file-group rewrite."""
+        target = int(cfg.props.get("write.target_file_mb", 128)) << 20
+        touched = {m.get("partition", "") for m in affected.values()}
+        small: dict[str, dict[str, dict]] = {}
+        for p, m in live.items():
+            pp = m.get("partition", "")
+            if (
+                pp in ranges
+                and pp not in touched
+                and m.get("kind") == "base"
+                and (m.get("bytes") or 0) < target
+            ):
+                small.setdefault(pp, {})[p] = m
+        out = dict(affected)
+        for files in small.values():
+            if len(files) >= self._SMALL_FILE_FOLD_MIN:
+                out.update(files)
         return out
 
     def upsert(
@@ -3408,7 +3578,7 @@ class Engine:
             self._precommit_validate(cfg, instant, added, [])
             meta = tl.commit(
                 instant, tlmod.DELTACOMMIT, "upsert", added, [],
-                self._commit_stats(added, None), batch_id=batch_id,
+                batch_id=batch_id,
             )
             self._index_append(cfg, batch)
             self._maybe_compact(cfg)
@@ -3418,16 +3588,10 @@ class Engine:
         try:
             live = tl.live_files()
             if live:
-                ranges, batch_rows = self._batch_key_ranges(batch)
-                if self._is_global(cfg):
-                    affected = self._global_candidates(
-                        cfg, live, ranges, batch
-                    )
-                else:
-                    affected = self._affected_files(live, ranges)
-                affected = self._bloom_prune(
-                    cfg, affected, batch, batch_rows
+                affected, ranges, batch_rows = self._index_lookup(
+                    cfg, live, batch
                 )
+                affected = self._fold_small_files(cfg, live, affected, ranges)
             else:
                 # first write (every derived view's bootstrap refresh):
                 # nothing to prune or merge against, so skip the
@@ -3503,7 +3667,7 @@ class Engine:
             self._precommit_validate(cfg, instant, added, sorted(affected))
             meta = tl.commit(
                 instant, tlmod.COMMIT, "upsert", added, sorted(affected),
-                self._commit_stats(added, None), batch_id=batch_id,
+                batch_id=batch_id,
             )
             self._index_append(cfg, batch)
             self._maybe_ttl(cfg)
@@ -3604,16 +3768,12 @@ class Engine:
                 PARTITION_PATH_META,
                 partition_path_col(cfg.partition_fields, cfg.hive_style),
             )
-        keyed = keyed.select(PARTITION_PATH_META, RECORD_KEY_META).distinct().persist()
+        # the key fields ride along for the lookup's key-field ranges
+        keyed = keyed.select(
+            PARTITION_PATH_META, RECORD_KEY_META, *(cfg.record_key_fields or [])
+        ).distinct().persist()
         tl = Timeline(cfg.path)
         try:
-            ranges, n_keys = self._batch_key_ranges(keyed)
-            live = tl.live_files()
-            if self._is_global(cfg):
-                affected = self._global_candidates(cfg, live, ranges, keyed)
-            else:
-                affected = self._affected_files(live, ranges)
-            affected = self._bloom_prune(cfg, affected, keyed, n_keys)
             if cfg.table_type == MOR:
                 snap = self.read(cfg)
                 markers = (
@@ -3627,6 +3787,7 @@ class Engine:
                 meta = tl.commit(instant, tlmod.DELTACOMMIT, "delete", added, [])
                 self._maybe_compact(cfg)
                 return meta
+            affected, _, _ = self._index_lookup(cfg, tl.live_files(), keyed)
             base = self._read_files(cfg, affected)
             keep = base.join(keyed.select(*on), on, "left_anti")
             added = self._materialize(
@@ -3655,6 +3816,10 @@ class Engine:
         for k in set:
             if k in cfg.partition_fields:
                 raise ValueError(f"cannot update partition column {k}")
+            if k in (cfg.record_key_fields or []):
+                # Hudi parity: a stored row's record key is derived from
+                # these fields, and the upsert lookup prunes on them
+                raise ValueError(f"cannot update record key field {k}")
         cond = _as_cond(where)
         instant = new_instant()
         tl = Timeline(cfg.path)
@@ -3719,6 +3884,27 @@ class Engine:
         self._secondary_append_updated(cfg, idx_batch, set)
         return meta
 
+    @staticmethod
+    def _check_key_assignments(
+        cfg: TableConfig, maps: list[dict], by_source: dict | None
+    ) -> None:
+        """MERGE may assign a record-key field only from the source's
+        same field (Hudi's MERGE INTO rule): a stored row's record key is
+        derived from its key fields, and the upsert lookup prunes files
+        on those fields' ranges. A not-matched-by-source update has no
+        source row, so it may not assign one at all."""
+        for f in cfg.record_key_fields or []:
+            if by_source and f in by_source:
+                raise ValueError(f"cannot update record key field {f}")
+            for m in maps:
+                if f in m and str(m[f]).replace("`", "").strip() not in (
+                    f"s.{f}", f"Column<'s.{f}'>",
+                ):
+                    raise ValueError(
+                        f"record key field {f} may only be assigned "
+                        f"s.{f} in MERGE"
+                    )
+
     def merge(
         self,
         table: str | TableConfig,
@@ -3764,30 +3950,22 @@ class Engine:
         src = self._dedup_batch(src, cfg).persist()
         flagged = None
         try:
-            ranges, n_src = self._batch_key_ranges(src)
             live = tl.live_files()
             on = self._merge_key_cols(cfg)
-            has_by_source = (
+            if (
                 not_matched_by_source_delete_cond is not None
                 or not_matched_by_source_update_set is not None
-            )
-            if has_by_source:
+            ):
                 # by-source clauses can touch ANY unmatched target row:
                 # pruning would hide rows from them — full live scan
                 affected = dict(live)
-            elif self._is_global(cfg):
-                # global index: a source row may match a target row in a
-                # DIFFERENT partition (and a matched update moves it) —
-                # key-only join over the globally pruned candidate set
-                affected = self._global_candidates(cfg, live, ranges, src)
             else:
-                affected = self._affected_files(live, ranges)
-            if not has_by_source:
-                # bloom-pruned files provably hold none of the source's
-                # keys: their rows would all take the keep-unmatched-
-                # target branch, so leaving them live unscanned is
-                # semantics-preserving
-                affected = self._bloom_prune(cfg, affected, src, n_src)
+                # pruned files provably hold none of the source's keys
+                # (under the global index: in any partition — a matched
+                # update may MOVE the record): their rows would all take
+                # the keep-unmatched-target branch, so leaving them live
+                # unscanned is semantics-preserving
+                affected, _, _ = self._index_lookup(cfg, live, src)
             base = self._read_files(cfg, affected)
             if cfg.table_type == MOR:
                 base = self._merge_view(base, cfg)
@@ -3868,6 +4046,12 @@ class Engine:
                 lambda a, b: a | b,
                 [f for f, _ in ins_branches],
                 F.lit(False),
+            )
+            self._check_key_assignments(
+                cfg,
+                [a for _, a in norm_clauses if isinstance(a, dict)]
+                + [v for _, v in norm_ins if isinstance(v, dict)],
+                not_matched_by_source_update_set,
             )
             drop_insert = s_only & ~do_insert
             t_only = t_here & ~s_here
@@ -4376,7 +4560,6 @@ class Engine:
         added = self._materialize(folded, cfg, instant, "delta")
         return tl.commit(
             instant, "logcompaction", "log_compact", added, sorted(target),
-            self._commit_stats(added, None),
         )
 
     def compact(
@@ -4643,7 +4826,6 @@ class Engine:
             "cluster",
             added,
             sorted(live),
-            self._commit_stats(added, None),
         )
 
     def schedule_clustering(
@@ -4805,7 +4987,6 @@ class Engine:
             "bucket_resize",
             added,
             sorted(live),
-            self._commit_stats(added, None),
         )
 
     def clean(

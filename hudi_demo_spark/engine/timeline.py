@@ -135,13 +135,19 @@ class Timeline:
                     f"a concurrent writer: {gone[:3]}"
                 )
         self.dir.mkdir(parents=True, exist_ok=True)
+        stats = dict(stats or {})
+        rows = [f.get("rows", -1) for f in files_added]
+        if all(r >= 0 for r in rows):
+            # Hudi's totalRecordsWritten: every row of every file the
+            # commit wrote, carried-over rows of a COW rewrite included
+            stats.setdefault("rows_written", sum(rows))
         meta = {
             "instant": instant,
             "action": action,
             "operation": operation,
             "files_added": files_added,
             "files_removed": files_removed,
-            "stats": stats or {},
+            "stats": stats,
         }
         if batch_id is not None:
             meta["batch_id"] = batch_id

@@ -78,10 +78,12 @@ _ASOF = "as.of.instant"
 class LakehouseReadTask(InputPartition):
     """Self-contained executor task: files + optional merge spec."""
 
-    def __init__(self, files, schema_json, merge_keys, sort_cols,
+    def __init__(self, files, schema_ipc, merge_keys, sort_cols,
                  sort_ascending, begin, end, renames=None):
         self.files = files
-        self.schema_json = schema_json
+        # the target Arrow schema, IPC-serialized (every type the engine
+        # writes — nested list/struct/map included — round-trips)
+        self.schema_ipc = schema_ipc
         self.merge_keys = merge_keys  # None => plain concat
         self.sort_cols = sort_cols
         self.sort_ascending = sort_ascending
@@ -420,8 +422,6 @@ class LakehouseReader(DataSourceReader):
             raise RuntimeError(str(e)) from e
 
     def _plan(self):
-        import json
-
         cfg = self.cfg
         tl = Timeline(cfg.path)
         qt = self._opt(_QT, "query_type", default="snapshot").lower()
@@ -497,7 +497,7 @@ class LakehouseReader(DataSourceReader):
             if is_global
             else [PARTITION_PATH_META, RECORD_KEY_META]
         )
-        schema_json = json.dumps(self._arrow_fields())
+        schema_ipc = self._arrow_schema_ipc()
         data = Path(cfg.path) / DATA_DIR
         renames = self._epoch_renames(files)
 
@@ -512,7 +512,7 @@ class LakehouseReader(DataSourceReader):
                 fp = str(data / p)
                 tasks.append(
                     LakehouseReadTask(
-                        [fp], schema_json, None, sort_cols,
+                        [fp], schema_ipc, None, sort_cols,
                         False, row_begin, row_end, renames=_ren([fp]),
                     )
                 )
@@ -522,7 +522,7 @@ class LakehouseReader(DataSourceReader):
             fps = [str(data / p) for p in sorted(files)]
             tasks.append(
                 LakehouseReadTask(
-                    fps, schema_json,
+                    fps, schema_ipc,
                     merge_keys, sort_cols, False, row_begin, row_end,
                     renames=_ren(fps),
                 )
@@ -536,7 +536,7 @@ class LakehouseReader(DataSourceReader):
                 tasks.append(
                     LakehouseReadTask(
                         fps,
-                        schema_json, merge_keys, sort_cols, False,
+                        schema_ipc, merge_keys, sort_cols, False,
                         row_begin, row_end, renames=_ren(fps),
                     )
                 )
@@ -574,16 +574,19 @@ class LakehouseReader(DataSourceReader):
                 out[str(data / p)] = rev
         return out
 
-    def _arrow_fields(self):
-        """(name, arrow-type-repr) list for the FULL stored schema (incl
-        the MOR delete marker — read() filters and drops it)."""
+    def _arrow_schema_ipc(self) -> bytes:
+        """The FULL stored schema (incl the MOR delete marker — read()
+        filters and drops it) as an IPC-serialized Arrow schema."""
         import json as _json
 
+        import pyarrow as pa
         from pyspark.sql import types as T
         from pyspark.sql.pandas.types import to_arrow_type
 
         full = T.StructType.fromJson(_json.loads(self.cfg.schema_json))
-        return [(f.name, str(to_arrow_type(f.dataType))) for f in full.fields]
+        return pa.schema(
+            [(f.name, to_arrow_type(f.dataType)) for f in full.fields]
+        ).serialize().to_pybytes()
 
     # ---------------- executor-side read ----------------
 
@@ -592,19 +595,11 @@ class LakehouseReader(DataSourceReader):
             # Spark substitutes [None] for an empty partitions() list
             # (e.g. read_optimized on a delta-only table): zero rows
             return
-        import json
-
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        fields = json.loads(part.schema_json)
-        # re-derive arrow types from their string form (all types the
-        # engine writes round-trip: int/long/double/string/bool/binary/
-        # timestamp/date/decimal/list<...>)
-        target = pa.schema(
-            [(n, _parse_arrow_type(t)) for n, t in fields]
-        )
+        target = pa.ipc.read_schema(pa.py_buffer(part.schema_ipc))
         renames = getattr(part, "renames", None) or {}
         tabs = []
         for f in part.files:
@@ -653,32 +648,6 @@ class _LakehouseReaderNoPushdown(LakehouseReader):
     read proceeds with every filter evaluated post-scan by Spark."""
 
     pushFilters = DataSourceReader.pushFilters
-
-
-def _parse_arrow_type(s: str):
-    """Inverse of str(pa.DataType) for the types the engine writes."""
-    import re
-
-    import pyarrow as pa
-
-    simple = {
-        "int8": pa.int8(), "int16": pa.int16(), "int32": pa.int32(),
-        "int64": pa.int64(), "float": pa.float32(), "double": pa.float64(),
-        "string": pa.string(), "large_string": pa.large_string(),
-        "bool": pa.bool_(), "binary": pa.binary(), "date32[day]": pa.date32(),
-    }
-    if s in simple:
-        return simple[s]
-    m = re.match(r"timestamp\[(\w+)(?:, tz=(.+))?\]$", s)
-    if m:
-        return pa.timestamp(m.group(1), tz=m.group(2))
-    m = re.match(r"decimal128\((\d+), (\d+)\)$", s)
-    if m:
-        return pa.decimal128(int(m.group(1)), int(m.group(2)))
-    m = re.match(r"(?:large_)?list<item: (.+)>$", s)
-    if m:
-        return pa.list_(_parse_arrow_type(m.group(1)))
-    raise ValueError(f"unsupported arrow type repr: {s}")
 
 
 class LakehouseStreamReader(DataSourceStreamReader):
@@ -777,11 +746,11 @@ class LakehouseStreamReader(DataSourceStreamReader):
                 files[f["path"]] = {**f, "commit": m["instant"]}
         data = Path(cfg.path) / DATA_DIR
         files = {p: m for p, m in files.items() if (data / p).is_file()}
-        schema_json = __import__("json").dumps(self._reader._arrow_fields())
+        schema_ipc = self._reader._arrow_schema_ipc()
         renames = self._reader._epoch_renames(files)
         tasks = [
             LakehouseReadTask(
-                [str(data / p)], schema_json, None,
+                [str(data / p)], schema_ipc, None,
                 [COMMIT_TIME_META], False, lo or None, hi or None,
                 renames={
                     str(data / p): renames[str(data / p)]
@@ -793,7 +762,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
             # empty batch: one zero-file task (planner requires >=1)
             tasks = [
                 LakehouseReadTask(
-                    [], schema_json, None, [COMMIT_TIME_META], False,
+                    [], schema_ipc, None, [COMMIT_TIME_META], False,
                     None, None,
                 )
             ]
@@ -1042,6 +1011,7 @@ class LakehouseWriter(DataSourceWriter):
                     "kind": "base" if self.table_type != MOR else "delta",
                     "partition": pp,
                     "bytes": (tdir / fname).stat().st_size,
+                    "rows": len(grp),
                     "key_min": keys.min(),
                     "key_max": keys.max(),
                 }
@@ -1062,10 +1032,7 @@ class LakehouseWriter(DataSourceWriter):
             operation = "insert_overwrite_table"
             removed = "*"
         _invalidate_indexes(cfg)
-        tl.commit(
-            self.instant, action, operation, added, removed,
-            {"rows_written": None},
-        )
+        tl.commit(self.instant, action, operation, added, removed)
         if cfg.schema_json != self.full_schema_json:
             if cfg.schema_json is None or self.overwrite:
                 cfg.schema_json = self.full_schema_json
@@ -1147,7 +1114,7 @@ class LakehouseStreamWriter(LakehouseWriter, DataSourceStreamWriter):
         _invalidate_indexes(cfg)
         tl.commit(
             instant, action, operation, added, removed,
-            {"rows_written": None}, batch_id=batchId,
+            batch_id=batchId,
         )
         if cfg.schema_json is None:
             cfg.schema_json = self.full_schema_json

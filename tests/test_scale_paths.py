@@ -98,6 +98,16 @@ def test_bloom_probe_distributed_no_driver_sidecar_reads(engine, spark,
     engine.insert(_mkdf(spark, _batch("seed", 1, 721)), "t")
     flagged = _live(engine, "t")
     assert len(flagged) >= 64
+    # probe an id inside EVERY file's id range, so neither the key-text
+    # nor the typed key-field ranges can drop a file
+    from hudi_demo_spark.engine.timeline import Timeline
+
+    id_ranges = [
+        m["key_field_ranges"]["id"]
+        for m in Timeline(engine._resolve("t").path).live_files().values()
+    ]
+    probe = max(lo for lo, _ in id_ranges)
+    assert probe <= min(hi for _, hi in id_ranges)
 
     calls = []
     real_load = B.load
@@ -107,13 +117,13 @@ def test_bloom_probe_distributed_no_driver_sidecar_reads(engine, spark,
         return real_load(path)
 
     monkeypatch.setattr(B, "load", driver_load)
-    meta = engine.upsert(_mkdf(spark, [(5, "upd", 11.0, 200,
+    meta = engine.upsert(_mkdf(spark, [(probe, "upd", 11.0, 200,
                                         "2022-09-05")]), "t")
     # the probe ran on executors: zero driver-side sidecar loads
     assert calls == []
     # and it actually pruned: a 1-key upsert rewrites ~1 file group
     assert 1 <= len(meta["files_removed"]) <= 4
-    row = engine.read("t").filter("id = 5").select("price").collect()
+    row = engine.read("t").filter(f"id = {probe}").select("price").collect()
     assert [r[0] for r in row] == [11.0]
 
 
