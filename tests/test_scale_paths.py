@@ -225,13 +225,15 @@ def test_footer_rows_distributes_large_commits(engine, tmp_path, monkeypatch):
     # module in their own processes, so counts stay correct iff the read
     # fanned out
     monkeypatch.setattr(pq, "ParquetFile", driver_pf)
-    out = engine._footer_rows(paths)
+    out = {p: r for p, (r, _, _) in engine._footer_stats(paths, []).items()}
     assert calls == []  # zero driver footer reads at 70 files
     assert out[paths[0]] == 0 and out[paths[1]] == 3
     assert len(out) == 70
 
     # under the threshold the driver path is used (and counted)
-    small = engine._footer_rows(paths[:5])
+    small = {
+        p: r for p, (r, _, _) in engine._footer_stats(paths[:5], []).items()
+    }
     assert len(calls) == 5
     assert small[paths[0]] == 0 and small[paths[1]] == 3
 

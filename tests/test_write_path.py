@@ -5,8 +5,9 @@
   tables against a dict model, for single and composite keys over int,
   string, null and "" values, partitioned and global-index; targeted
   cases pin the placeholder and ',' collisions the proof must respect.
-- A batch of new keys appends instead of rewriting, and appends fold a
-  partition's small files once it holds `_SMALL_FILE_FOLD_MIN` of them.
+- A batch of new keys appends instead of rewriting, and an append folds
+  a partition's `_SMALL_FILE_FOLD_MIN` smallest files when they fit one
+  target file; the lookup summary's collect and aggregate paths agree.
 - `show_commits.total_records` is the true row count of every commit.
 - A small COW upsert runs at most 3 Spark jobs (host-independent gate).
 """
@@ -270,18 +271,119 @@ def test_append_folds_small_files(engine, spark):
     assert engine.read("f").count() == k_min + 1
 
 
+def test_fold_rewrites_at_most_one_target_file(engine, spark):
+    """A fold takes only the K smallest base files and only when they
+    fit one target file together. Here K files of ~half a target each
+    hold interleaved ids, so a new key lies inside every file's id range
+    and bloom alone prunes them: the append must not rewrite them."""
+    k_min = E._SMALL_FILE_FOLD_MIN
+    target = 1 << 20
+    engine.create_table("b", record_key="k", precombine="ts",
+                        partition_by="p",
+                        props={"index.bloom.enabled": "true",
+                               "write.target_file_mb": "1"})
+    for i in range(k_min):
+        wide = (
+            spark.range(i, 3000 * (k_min + 1), k_min + 1)
+            .select(
+                F.col("id").alias("k"),
+                # ~190 incompressible bytes a row
+                F.concat(F.sha2(F.col("id").cast("string"), 512),
+                         F.sha2(F.col("id").cast("string"), 256)).alias("s"),
+                F.lit(None).cast("string").alias("t"),
+                F.lit("a").alias("p"),
+                F.lit(1).cast("long").alias("ts"),
+                F.col("id").alias("v"),
+            )
+            .coalesce(1)
+        )
+        assert engine.upsert(wide, "b")["files_removed"] == []
+    sizes = sorted(m["bytes"] for m in _live(engine, "b").values())
+    assert len(sizes) == k_min and sizes[-1] < target < sum(sizes)
+    folds = 0
+    for j in range(6):
+        live = _live(engine, "b")
+        new_key = (k_min + 1) * (100 + j) + k_min  # in no file, in every range
+        meta = engine.upsert(
+            _df(spark, [(new_key, "n", None, "a", 2, j)]).coalesce(1), "b"
+        )
+        removed = meta["files_removed"]
+        if j == 0:
+            assert removed == []
+        assert len(removed) <= k_min
+        assert sum(live[p]["bytes"] for p in removed) <= target
+        folds += bool(removed)
+    # the tiny appends still fold once K of them fit with one big file
+    assert folds >= 1
+    snap = engine.read("b")
+    assert snap.count() == 3000 * k_min + 6
+    assert snap.select("k").distinct().count() == 3000 * k_min + 6
+
+
+def test_batch_key_ranges_branches_agree(engine, spark):
+    """Past _KEY_COLLECT_CAP rows the lookup summary comes from a grouped
+    aggregate instead of the driver collect; both must give the same
+    (ranges, rows, key-field ranges), nulls, placeholders and ',' too."""
+    from hudi_demo_spark.engine.timeline import new_instant
+
+    batches = [
+        [(1, "a", "b", "a", 1, 0), (7, None, "c", "a", 2, 1),
+         (3, "zz", "", "b", 3, 2)],
+        [(2, "a,t:b", "c", "a", 1, 0), (9, "b", "b,t:c", "b", 2, 1)],
+        [(4, NULL_PLACEHOLDER, EMPTY_PLACEHOLDER, "a", 1, 0),
+         (5, "c", "d", "b", 1, 1)],
+        # one partition whose k values are all null
+        [(None, "a", "x", "a", 1, 0), (None, "b", "y", "a", 1, 1),
+         (6, "c", "z", "b", 1, 2)],
+    ]
+    for fields in (["k"], ["s"], ["s", "k"], ["s", "t"], ["k", "s", "t"]):
+        name = f"g{next(_counter)}"
+        engine.create_table(name, record_key=fields, precombine="ts",
+                            partition_by="p")
+        cfg = engine._resolve(name)
+        for rows in batches:
+            if any(r[COLS.index(f)] is None for r in rows for f in fields) \
+                    and len(fields) == 1:
+                continue  # a null single-field key is rejected at write
+            batch = engine._prepare(_df(spark, rows), cfg, new_instant())
+            collected = engine._batch_key_ranges(batch, cfg)
+            engine._KEY_COLLECT_CAP = 0
+            try:
+                aggregated = engine._batch_key_ranges(batch, cfg)
+            finally:
+                del engine._KEY_COLLECT_CAP
+            assert aggregated == collected, (fields, rows)
+            assert collected[1] == len(rows)
+
+
 def test_record_key_fields_are_immutable(engine, spark):
     engine.create_table("i", record_key="k", precombine="ts")
     engine.insert(_df(spark, [(1, "x", None, "a", 1, 1)]), "i")
     with pytest.raises(ValueError, match="record key"):
         engine.update("i", set={"k": "k + 1"}, where="k = 1")
     with pytest.raises(ValueError, match="record key"):
-        engine.merge("i", _df(spark, [(1, "y", None, "a", 2, 2)]),
-                     matched_update_set={"k": "s.k + 1"})
-    engine.merge("i", _df(spark, [(1, "y", None, "a", 2, 2)]),
-                 matched_update_set={"k": "s.k", "v": "s.v"})
+        engine.update("i", set={"K": "k + 1"}, where="k = 1")
+    src = _df(spark, [(1, "y", None, "a", 2, 2)])
+    sc = spark.sparkContext
+    for bad in ("s.k + 1", F.col("s.k") + 1, "s.v", F.col("t.k")):
+        group = f"key-guard-{next(_counter)}"
+        sc.setJobGroup(group, "rejected merge")
+        try:
+            with pytest.raises(ValueError, match="record key"):
+                engine.merge("i", src, matched_update_set={"k": bad})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # rejected before any Spark work
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    with pytest.raises(ValueError, match="record key"):
+        engine.merge("i", src, not_matched_insert_values={"k": "s.v"})
+    for i, good in enumerate(("s.k", " `s`.`k` ", F.col("s.k"),
+                              F.expr("s.k"), "S.K")):
+        engine.merge("i", _df(spark, [(1, "y", None, "a", 2 + i, 2 + i)]),
+                     matched_update_set={"k": good, "v": "s.v"})
     assert [tuple(r) for r in engine.read("i").select("k", "v").collect()] \
-        == [(1, 2)]
+        == [(1, 6)]
 
 
 # ------------------------------------------------------- commit records
